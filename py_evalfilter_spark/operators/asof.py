@@ -5,18 +5,25 @@ and the greatest ``right.ts <= left.ts`` (direction='backward', exact matches
 allowed).  Zero temporal leakage by construction: a right row with
 ``ts > left.ts`` can never be selected.
 
-Physical strategy (scale-first):
-  * both sides are hash-partitioned on ``pmod(xxhash64(key), num_buckets)``
-    via ``groupBy(bucket).cogroup`` — ONE co-partitioning shuffle each, no
-    broadcast of the big side, no row explosion (unlike a range-join +
-    dedup, which shuffles |matches| rows);
-  * ``num_buckets`` decouples task count from key cardinality: millions of
-    conversations collapse into ~shuffle-partition-sized Arrow groups
-    instead of one tiny pandas frame per conversation;
-  * inside each bucket a single vectorized ``pd.merge_asof(by=key)`` runs a
+Physical strategies (scale-first):
+  * :func:`asof_join_union_window` (the pipeline default, JVM only): the
+    right side is hash-partitioned on ``by`` and unioned with the left; one
+    window pass on ``by`` forward-fills the matched right row.  When the
+    left already carries ``hashpartitioning(by)`` — a window chain on
+    ``by`` upstream — the union keeps that partitioning, so the as-of
+    window only sorts and ONLY the small right side shuffles (the
+    co-partition-once plan of temporal-join processing); a left side
+    without it gets one Exchange over the union;
+  * :func:`asof_join` (cogroup): both sides are hash-partitioned on
+    ``pmod(xxhash64(key), num_buckets)`` via ``groupBy(bucket).cogroup`` —
+    ONE co-partitioning shuffle each, no broadcast of the big side, no row
+    explosion (unlike a range-join + dedup, which shuffles |matches| rows);
+    ``num_buckets`` decouples task count from key cardinality, and inside
+    each bucket a single vectorized ``pd.merge_asof(by=key)`` runs a
     sort-merge in C — no per-row Python (input_hint);
-  * a mega-key cannot straddle buckets (bucket is a function of the key), so
-    results are exact under skew; AQE handles residual partition imbalance.
+  * either way a mega-key cannot straddle partitions (placement is a
+    function of the key), so results are exact under skew; AQE handles
+    residual partition imbalance.
 """
 
 from __future__ import annotations
@@ -49,9 +56,10 @@ def asof_join_union_window(
     finally keep only left rows and unpack the struct.
 
     vs the cogroup/merge_asof variant: no Arrow round-trip of the (wide)
-    left columns, whole-stage-codegen window, ONE shuffle on ``by`` that
-    Catalyst can reuse for adjacent window stages.  Ties among right rows at
-    the same (by, on) resolve to the last in order — same as merge_asof.
+    left columns, whole-stage-codegen window, and a left side that is
+    already hash-partitioned on ``by`` (by upstream windows) is not
+    shuffled again — only the right side is.  Ties among right rows at the
+    same (by, on) resolve to the last in order — same as merge_asof.
     """
     right_ts_alias = right_ts_alias or f"{on}_right"
     rv_names = [f.name for f in right.schema.fields if f.name not in (by, on)]
@@ -76,7 +84,11 @@ def asof_join_union_window(
         for f in left.schema.fields
         if f.name not in (by, on)
     ]
-    rt = right.select(
+    # hash-partition the (small) right side on ``by``: when the left already
+    # carries hashpartitioning(by) — e.g. from a window chain on ``by`` —
+    # the union keeps that partitioning and the as-of window only sorts,
+    # so the big side is not shuffled again
+    rt = right.repartition(F.col(by)).select(
         F.col(by),
         F.col(on),
         *left_nulls,

@@ -1,7 +1,8 @@
 """End-to-end feature pipeline (SURVEY.md §3.4): the engine's flagship plan.
 
-transcripts → Arrow feature map → windowed features (one conv_id Exchange)
-→ as-of profile merge (bucketed cogroup) → wide per-turn feature rows.
+transcripts → windowed features (one conv_id Exchange) → as-of profile
+merge (union-window on the same partitioning) → Arrow feature map → wide
+per-turn feature rows.
 
 Scale notes (what survives a 1000-executor / 100 TB run):
   * the transcripts derivation's row_number window hash-partitions by user
@@ -9,11 +10,12 @@ Scale notes (what survives a 1000-executor / 100 TB run):
     inherits that balanced partitioning, so mega-conversations can't skew
     the map stage (per-turn features never cross rows → salting-safe);
   * all window features share the derivation's single conv_id Exchange;
-  * the as-of union-window adds ONE more full-data conv_id Exchange
-    (a Union's output partitioning is unknown to Catalyst, so the as-of
-    window must redistribute) plus the profile-side aggregation shuffle —
-    the full executed plan is exactly 3 hashpartitioning Exchanges, two of
-    them over the big side (pinned in tests/test_plans.py);
+  * the as-of union-window reuses that Exchange too: the profile side is
+    repartitioned on conv_id, the Union keeps the shared partitioning, and
+    the as-of window only sorts — the full executed plan is exactly 3
+    hashpartitioning Exchanges, ONE of them over the big side (the other
+    two are the profile-side aggregation and repartition; pinned in
+    tests/test_plans.py);
   * nothing collects to the driver; output is a DataFrame for the sink.
 """
 

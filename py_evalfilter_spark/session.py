@@ -11,6 +11,17 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _default_driver_memory() -> str:
+    """Half of physical RAM for the driver heap, which hosts every task in
+    local mode; the rest stays free for the JVM's off-heap memory, the
+    Python workers and the tmpfs shuffle directory below."""
+    try:
+        ram = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    except (AttributeError, ValueError, OSError):  # no sysconf on this OS
+        return "4g"
+    return f"{max(ram // 2 >> 20, 1024)}m"
+
+
 def get_spark(
     master: str | None = None,
     app_name: str = "py_evalfilter_spark",
@@ -34,7 +45,10 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEMORY") or _default_driver_memory(),
+        )
         # UI off by default (driver overhead); SPARK_GRAFT_UI=true exposes
         # the REST status API so benches can read per-stage shuffle
         # bytes/records — the term that becomes NETWORK on a real cluster

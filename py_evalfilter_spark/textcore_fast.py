@@ -6,9 +6,12 @@ per SURVEY.md §2.4); tests/test_textcore_fast.py asserts exact equality on
 fixtures, edge cases, and hypothesis-fuzzed unicode.
 
 Why this exists: the straightforward per-char Python path costs ~50µs/turn
-and dominates the pipeline; this path classifies codepoints in bulk
-(np.unique + cached dict), derives script runs with array diffs, and reduces
-per-document with bincount — ~10-40x faster inside the same Arrow batch.
+and dominates the pipeline; this path classifies codepoints by gathering
+from per-process dense codepoint tables (filled lazily, once per codepoint
+per worker), derives the scrubbed text and the script runs with array
+operations on one UTF-32 code array, and reduces per-document with
+bincount — ~10-40x faster inside the same Arrow batch.  After the tables
+warm up, NFKC normalization is the largest cost left.
 
 Key identities making this exact (derived from textcore semantics):
   * tokenize_rant LOWERCASES each run surface (textcore.py:165, mirroring
@@ -16,9 +19,9 @@ Key identities making this exact (derived from textcore semantics):
     token lengths and type predicates must be evaluated on the lowercase
     expansion, not the raw run: per codepoint we precompute
     ``chr(cp).lower()``'s length and its all-chars predicate flags
-    (kata / hira / kanji-or-hira / alpha / isdigit); a token's predicate is
-    then the AND (min-reduce) of its codepoints' flags and its length the
-    SUM of expansion lengths.  This matters for codepoints whose lowercase
+    (kata / hira / kanji-or-hira / alpha / isdigit), packed as five bits of
+    one uint8; a token's predicates are then the bitwise AND over its
+    codepoints' flag bytes and its length the SUM of expansion lengths.  This matters for codepoints whose lowercase
     crosses a script-name or length boundary (U+0130 'İ'→'i̇' len 2,
     U+212A KELVIN→'k', U+212B ANGSTROM→'å', U+2183 'Ↄ'→LATIN-named 'ↄ').
   * Python's str.lower() is context-sensitive only for U+03A3 (final
@@ -35,6 +38,9 @@ Key identities making this exact (derived from textcore semantics):
 """
 
 from __future__ import annotations
+
+import sys
+import unicodedata
 
 import numpy as np
 import pandas as pd
@@ -56,33 +62,64 @@ _CLS_TO_ID = {
 }
 
 _PROLONGED = 0x30FC  # 'ー'
-
-# per-process lazy codepoint cache:
-# cp -> (raw class_id, lowercase-expansion length,
-#        low all-kata, low all-hira, low all-(kanji|hira), low all-alpha,
-#        low isdigit)
-_cp_props: dict[int, tuple[int, int, bool, bool, bool, bool, bool]] = {}
+_NL, _CR, _SP, _BACKSLASH, _N = 0x0A, 0x0D, 0x20, 0x5C, 0x6E
 
 
 def _lookup(cp: int) -> tuple[int, int, bool, bool, bool, bool, bool]:
-    p = _cp_props.get(cp)
-    if p is None:
-        ch = chr(cp)
-        # token-level predicates and lengths run on the LOWERCASE expansion
-        # (tokenize_rant lowercases before token_counts/token_type_counts);
-        # the raw class drives segmentation and char counts only.
-        low = ch.lower()
-        p = (
-            _CLS_TO_ID[tc._char_class(ch)],
-            len(low),
-            all(tc.is_katakana(c) for c in low),
-            all(tc.is_hiragana(c) for c in low),
-            all(tc.is_kanji(c) or tc.is_hiragana(c) for c in low),
-            all(tc.is_alphabet(c) for c in low),
-            low.isdigit(),
-        )
-        _cp_props[cp] = p
-    return p
+    """cp → (raw class_id, lowercase-expansion length, low all-kata, low
+    all-hira, low all-(kanji|hira), low all-alpha, low isdigit): the
+    reference that fills the dense tables."""
+    ch = chr(cp)
+    # token-level predicates and lengths run on the LOWERCASE expansion
+    # (tokenize_rant lowercases before token_counts/token_type_counts);
+    # the raw class drives segmentation and char counts only.
+    low = ch.lower()
+    return (
+        _CLS_TO_ID[tc._char_class(ch)],
+        len(low),
+        all(tc.is_katakana(c) for c in low),
+        all(tc.is_hiragana(c) for c in low),
+        all(tc.is_kanji(c) or tc.is_hiragana(c) for c in low),
+        all(tc.is_alphabet(c) for c in low),
+        low.isdigit(),
+    )
+
+
+class _CodepointTables:
+    """Dense per-codepoint property tables over the whole Unicode range,
+    allocated on first use and filled from :func:`_lookup` only for
+    codepoints a batch has not seen before (class -1 marks unfilled)."""
+
+    def __init__(self) -> None:
+        self.cls: np.ndarray | None = None  # int8 raw class id
+        self.low_len: np.ndarray | None = None  # uint8 lowercase length
+        # uint8, bit i = _lookup(cp)[2 + i]: the lowercase expansion is
+        # all-kata, all-hira, all-(kanji|hira), all-alpha, isdigit
+        self.flags: np.ndarray | None = None
+
+    def gather(self, codes: np.ndarray) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+        """codes → (raw class ids, lowercase lengths, flag bytes)."""
+        if self.cls is None:
+            n = sys.maxunicode + 1
+            self.cls = np.full(n, -1, np.int8)
+            self.low_len = np.zeros(n, np.uint8)
+            self.flags = np.zeros(n, np.uint8)
+        cls = self.cls[codes]
+        unfilled = cls < 0
+        if unfilled.any():
+            new = np.unique(codes[unfilled])
+            props = [_lookup(cp) for cp in new.tolist()]
+            self.cls[new] = [p[0] for p in props]
+            self.low_len[new] = [p[1] for p in props]
+            self.flags[new] = [
+                sum(int(f) << b for b, f in enumerate(p[2:])) for p in props
+            ]
+            cls = self.cls[codes]
+        return cls, self.low_len[codes], self.flags[codes]
+
+
+_TABLES = _CodepointTables()
+_SPACE_CODE = np.array([_SP], np.uint32)
 
 
 def _encode(texts: list[str]) -> tuple[np.ndarray, np.ndarray]:
@@ -95,29 +132,19 @@ def _encode(texts: list[str]) -> tuple[np.ndarray, np.ndarray]:
     return codes, lens
 
 
-def _classify(codes: np.ndarray) -> tuple[np.ndarray, ...]:
-    """codes → (raw class ids, low length, low kata/hira/kanji|hira/alpha
-    flags, low isdigit flags) using the lazy codepoint cache."""
-    if codes.size == 0:
-        e8 = np.empty(0, np.int8)
-        eb = np.empty(0, bool)
-        return e8, np.empty(0, np.int16), eb, eb.copy(), eb.copy(), eb.copy(), eb.copy()
-    uniq, inv = np.unique(codes, return_inverse=True)
-    m = len(uniq)
-    cls_u = np.empty(m, np.int8)
-    len_u = np.empty(m, np.int16)
-    flag_u = np.empty((m, 5), bool)
-    for i, cp in enumerate(uniq.tolist()):
-        c, ln, lk, lh, lkh, la, ld = _lookup(cp)
-        cls_u[i] = c
-        len_u[i] = ln
-        flag_u[i, 0] = lk
-        flag_u[i, 1] = lh
-        flag_u[i, 2] = lkh
-        flag_u[i, 3] = la
-        flag_u[i, 4] = ld
-    f = flag_u[inv]
-    return cls_u[inv], len_u[inv], f[:, 0], f[:, 1], f[:, 2], f[:, 3], f[:, 4]
+def _scrub(codes: np.ndarray, doc: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """textcore.scrub_newlines over the concatenated batch, as positions:
+    returns (positions that become ' ', mask of positions kept).  Same order
+    as the reference: '\\n' → ' ', then a backslash followed by 'n' IN THE
+    SAME DOCUMENT → ' ' (the pair cannot overlap itself, and '\\n' is
+    neither of its characters, so every match is independent and can be
+    found on the unscrubbed codes), then drop '\\r'."""
+    pair = np.flatnonzero(
+        (codes[:-1] == _BACKSLASH) & (codes[1:] == _N) & (doc[:-1] == doc[1:])
+    )
+    keep = codes != _CR
+    keep[pair + 1] = False
+    return np.concatenate((np.flatnonzero(codes == _NL), pair)), keep
 
 
 def batch_rant_stats(texts) -> pd.DataFrame:
@@ -126,21 +153,22 @@ def batch_rant_stats(texts) -> pd.DataFrame:
     Returns a DataFrame with the 19 FEATURE_NAMES columns (float64), row
     order matching the input.
     """
-    normed = [tc.nfkc(t) if isinstance(t, str) else "" for t in texts]
+    # textcore.nfkc, without a wrapper call per text
+    normed = [
+        unicodedata.normalize("NFKC", t) if isinstance(t, str) else "" for t in texts
+    ]
     n = len(normed)
     out = np.zeros((n, len(tc.FEATURE_NAMES)), dtype="float64")
     col = {name: i for i, name in enumerate(tc.FEATURE_NAMES)}
+    codes, lens = _encode(normed)
+    if not codes.size:
+        return pd.DataFrame(out, columns=list(tc.FEATURE_NAMES))
 
     # ---- char counts on the normalized, UNscrubbed text -------------------
-    codes, lens = _encode(normed)
-    cls = _classify(codes)[0]
-    if codes.size:
-        doc = np.repeat(np.arange(n, dtype=np.int64), lens)
-        cc = np.bincount(doc * 9 + cls, minlength=n * 9).reshape(n, 9)
-        prolonged = np.bincount(doc[codes == _PROLONGED], minlength=n)
-    else:
-        cc = np.zeros((n, 9), dtype=np.int64)
-        prolonged = np.zeros(n, dtype=np.int64)
+    doc = np.repeat(np.arange(n, dtype=np.int64), lens)
+    cls, llen, flags = _TABLES.gather(codes)
+    cc = np.bincount(doc * 9 + cls, minlength=n * 9).reshape(n, 9)
+    prolonged = np.bincount(doc[codes == _PROLONGED], minlength=n)
     out[:, col["kata"]] = cc[:, KATA]
     out[:, col["hira"]] = cc[:, HIRA]
     out[:, col["kanji"]] = cc[:, KANJI]
@@ -150,73 +178,51 @@ def batch_rant_stats(texts) -> pd.DataFrame:
     out[:, col["punct"]] = cc[:, PUNCT] + prolonged
 
     # ---- token stats on the scrubbed text ---------------------------------
-    scrubbed = [tc.scrub_newlines(t) for t in normed]
-    s_codes, s_lens = _encode(scrubbed)
-    if s_codes.size:
-        s_cls, s_llen, s_lk, s_lh, s_lkh, s_la, s_ld = _classify(s_codes)
-        s_doc = np.repeat(np.arange(n, dtype=np.int64), s_lens)
-        start = np.empty(len(s_codes), dtype=bool)
-        start[0] = True
-        np.not_equal(s_cls[1:], s_cls[:-1], out=start[1:])
-        start[1:] |= s_doc[1:] != s_doc[:-1]
-        starts = np.flatnonzero(start)
-        run_cls = s_cls[starts]
-        run_doc = s_doc[starts]
-        # token length = length of the LOWERCASED surface (sum of per-char
-        # lowercase-expansion lengths; 'İ' expands to 2 chars)
-        run_len = np.add.reduceat(s_llen.astype(np.int64), starts)
-        # per-token all(...) predicate ⇔ min over run of per-char flags,
-        # evaluated on the lowercase expansion (textcore.py:165 lowers first)
-        def _run_all(flags: np.ndarray) -> np.ndarray:
-            return np.minimum.reduceat(flags.astype(np.int8), starts).astype(bool)
+    # the scrubbed text's table rows: the normalized text's rows with the
+    # space row written where scrub_newlines writes ' ', minus dropped chars
+    to_space, keep = _scrub(codes, doc)
+    for table, space_row in zip((cls, llen, flags), _TABLES.gather(_SPACE_CODE)):
+        table[to_space] = space_row[0]
+    s_cls, s_llen, s_flags, s_doc = cls[keep], llen[keep], flags[keep], doc[keep]
+    if not s_doc.size:
+        return pd.DataFrame(out, columns=list(tc.FEATURE_NAMES))
+    start = np.empty(len(s_doc), dtype=bool)
+    start[0] = True
+    np.not_equal(s_cls[1:], s_cls[:-1], out=start[1:])
+    start[1:] |= s_doc[1:] != s_doc[:-1]
+    starts = np.flatnonzero(start)
+    tok = s_cls[starts] != SPACE
+    run_doc = s_doc[starts][tok]
+    # token length = length of the LOWERCASED surface (sum of per-char
+    # lowercase-expansion lengths; 'İ' expands to 2 chars)
+    run_len = np.add.reduceat(s_llen, starts, dtype=np.int64)[tok]
+    # per-token all(...) predicates ⇔ AND over the run's flag bytes,
+    # evaluated on the lowercase expansion (textcore.py:165 lowers first)
+    run_flags = np.bitwise_and.reduceat(s_flags, starts)[tok]
+    capped = np.minimum(run_len, 5)
 
-        run_kata = _run_all(s_lk)
-        run_hira = _run_all(s_lh)
-        run_kanji = _run_all(s_lkh)
-        run_alpha = _run_all(s_la)
-        run_isdig = _run_all(s_ld)
+    hist = np.bincount(run_doc * 5 + (capped - 1), minlength=n * 5).reshape(n, 5)
+    total = hist.sum(axis=1)
+    out[:, col["1char"]] = hist[:, 0]
+    out[:, col["2char"]] = hist[:, 1]
+    out[:, col["3char"]] = hist[:, 2]
+    out[:, col["4char"]] = hist[:, 3]
+    out[:, col["5+char"]] = hist[:, 4]
+    out[:, col["tokens"]] = total
 
-        keep = run_cls != SPACE
-        run_doc, run_len = run_doc[keep], run_len[keep]
-        run_kata, run_hira, run_kanji, run_alpha, run_isdig = (
-            run_kata[keep],
-            run_hira[keep],
-            run_kanji[keep],
-            run_alpha[keep],
-            run_isdig[keep],
+    weighted = np.bincount(run_doc, weights=capped, minlength=n)
+    safe_total = np.maximum(total, 1)
+    out[:, col["avgTokenLength"]] = np.where(total > 0, weighted / safe_total, 0.0)
+    for bit, name in enumerate(
+        (
+            "kataTokensRatio",
+            "hiraTokensRatio",
+            "kanjiTokensRatio",
+            "alphaTokensRatio",
+            "digitTokensRatio",
         )
-        capped = np.minimum(run_len, 5)
-
-        hist = np.bincount(run_doc * 5 + (capped - 1), minlength=n * 5).reshape(n, 5)
-        total = hist.sum(axis=1)
-        out[:, col["1char"]] = hist[:, 0]
-        out[:, col["2char"]] = hist[:, 1]
-        out[:, col["3char"]] = hist[:, 2]
-        out[:, col["4char"]] = hist[:, 3]
-        out[:, col["5+char"]] = hist[:, 4]
-        out[:, col["tokens"]] = total
-
-        weighted = np.bincount(run_doc, weights=capped, minlength=n)
-        with np.errstate(invalid="ignore", divide="ignore"):
-            avg = np.where(total > 0, weighted / np.maximum(total, 1), 0.0)
-        out[:, col["avgTokenLength"]] = avg
-
-        def _type_count(mask: np.ndarray) -> np.ndarray:
-            return np.bincount(run_doc[mask], minlength=n)
-
-        t_kata = _type_count(run_kata)
-        t_hira = _type_count(run_hira)
-        t_kanji = _type_count(run_kanji)
-        t_alpha = _type_count(run_alpha)
-        t_digit = _type_count(run_isdig)
-        safe_total = np.maximum(total, 1)
-        for name, tcnt in (
-            ("kataTokensRatio", t_kata),
-            ("hiraTokensRatio", t_hira),
-            ("kanjiTokensRatio", t_kanji),
-            ("alphaTokensRatio", t_alpha),
-            ("digitTokensRatio", t_digit),
-        ):
-            out[:, col[name]] = np.where(total > 0, tcnt / safe_total, 0.0)
+    ):
+        tcnt = np.bincount(run_doc[(run_flags >> bit) & 1 == 1], minlength=n)
+        out[:, col[name]] = np.where(total > 0, tcnt / safe_total, 0.0)
 
     return pd.DataFrame(out, columns=list(tc.FEATURE_NAMES))

@@ -24,6 +24,19 @@ def _optimized(df) -> str:
     return df._jdf.queryExecution().optimizedPlan().toString()
 
 
+def _union_branches(plan: str) -> tuple[str, str, str]:
+    """Split a plan string at its single Union, whose subtree must end the
+    string (every node above it unary): (the lines above the Union, its
+    first branch, its second branch)."""
+    lines = plan.splitlines()
+    [u] = [i for i, ln in enumerate(lines) if ln.lstrip(" :+-") == "Union"]
+    col = lines[u].index("+-") + 3  # where the children's tree markers sit
+    below = lines[u + 1:]
+    first = [ln for ln in below if ln[col:col + 1] == ":"]
+    second = [ln for ln in below if ln[col:col + 1] != ":"]
+    return "\n".join(lines[:u]), "\n".join(first), "\n".join(second)
+
+
 class TestScanProperties:
     def test_filter_pushdown_and_pruning(self, spark):
         df = dq.q_scan_filter_project(spark, SF)
@@ -72,8 +85,12 @@ class TestWindowChain:
         bare count()+sum(tokens) Catalyst prunes the whole chain (zero
         hashpartitioning Exchanges) and the bench would measure scan+map
         only (round-1 mistake).  Expected: exactly 3 hashpartitioning
-        Exchanges — derivation(conv_id) shared by all windows, the as-of
-        union re-shuffle(conv_id), and the profile-side aggregation."""
+        Exchanges — derivation(conv_id) shared by all windows AND by the
+        as-of union-window, the profile-side aggregation, and the
+        profile-side repartition(conv_id).  The transcript side is shuffled
+        once: its branch under the as-of Union holds only the derivation's
+        Exchange, and no Exchange sits between the Union and the as-of
+        window."""
         from py_evalfilter_spark.plans.pipeline import feature_pipeline
 
         aggs = [
@@ -83,6 +100,14 @@ class TestWindowChain:
         ]
         plan = _plan(feature_pipeline(spark, SF).selectExpr(*aggs))
         assert plan.count("Exchange hashpartitioning") == 3, plan[:900]
+        above, profile, transcript = _union_branches(plan)
+        assert "last(__rstruct" in above and "Exchange" not in above.split(
+            "last(__rstruct"
+        )[1], plan
+        assert "REPARTITION_BY_COL" in profile, profile
+        assert profile.count("Exchange hashpartitioning") == 2, profile
+        assert transcript.count("Exchange hashpartitioning(conv_id") == 1, transcript
+        assert "REPARTITION_BY_COL" not in transcript, transcript
         # sort reuse: the window chain orders by (ts, __ord) — the identical
         # permutation as (turn_idx, ts) — so it reuses the derivation
         # WindowExec's sort: exactly 2 Sort nodes (derivation + as-of union),

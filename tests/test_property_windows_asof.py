@@ -140,3 +140,71 @@ def test_asof_matched_row_null_column_stays_null(spark):
         assert pd.isna(out_tol["profile_ts"].iloc[0])
         assert pd.isna(out_tol["pv"].iloc[0])
         assert pd.isna(out_tol["seg"].iloc[0]), f"{impl.__name__}: stale seg survived"
+
+
+def _golden_merge_asof(pdf, prof, tolerance_s=None):
+    """pd.merge_asof backward, exact matches allowed, optional staleness cut."""
+    merged = pd.merge_asof(
+        pdf.sort_values("ts", kind="mergesort"),
+        prof.rename(columns={"ts": "profile_ts"}).sort_values("profile_ts", kind="mergesort"),
+        left_on="ts",
+        right_on="profile_ts",
+        by="conv_id",
+        direction="backward",
+        allow_exact_matches=True,
+        tolerance=None if tolerance_s is None else pd.Timedelta(seconds=tolerance_s),
+    )
+    return merged.sort_values(KEY, kind="mergesort").reset_index(drop=True)
+
+
+@pytest.mark.parametrize("case", ["raw_scan", "aqe_coalesced", "tolerance"])
+def test_union_window_matches_merge_asof(spark, tmp_path, transcripts_pdf, profiles_pdf, case):
+    """The union-window as-of equals pd.merge_asof whether or not the left
+    side arrives hash-partitioned on ``by``: a raw parquet scan (the union
+    then has no usable partitioning and the window shuffles both sides),
+    a window-chain output under AQE partition coalescing (the union keeps
+    the chain's partitioning only if both branches coalesce alike), and
+    with a staleness tolerance."""
+    tolerance_s = 1800 if case == "tolerance" else None
+    if case == "raw_scan":
+        spark.createDataFrame(transcripts_pdf).write.parquet(str(tmp_path / "t"))
+        left = spark.read.parquet(str(tmp_path / "t"))
+    else:
+        left = windows.with_backfill(spark.createDataFrame(transcripts_pdf))
+    right = spark.createDataFrame(profiles_pdf)
+    confs = {}
+    if case == "aqe_coalesced":
+        confs = {
+            "spark.sql.shuffle.partitions": "16",
+            "spark.sql.adaptive.coalescePartitions.parallelismFirst": "false",
+            "spark.sql.adaptive.advisoryPartitionSizeInBytes": "256m",
+        }
+    saved = {k: spark.conf.get(k, None) for k in confs}
+    try:
+        for k, v in confs.items():
+            spark.conf.set(k, v)
+        df = asof.asof_join_union_window(
+            left, right, on="ts", by="conv_id", right_ts_alias="profile_ts",
+            tolerance_s=tolerance_s,
+        )
+        out = df.toPandas().sort_values(KEY, kind="mergesort").reset_index(drop=True)
+        if case == "aqe_coalesced":
+            plan = df._jdf.queryExecution().executedPlan().toString()
+            assert "coalesced" in plan, plan
+    finally:
+        for k, v in saved.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+    want = _golden_merge_asof(transcripts_pdf, profiles_pdf, tolerance_s)
+    assert len(out) == len(want)
+    assert (out[KEY] == want[KEY]).all().all()
+    for col in ["profile_ts", "empathies", "state", "birthyear"]:
+        av, bv = out[col], want[col]
+        assert ((av == bv) | (av.isna() & bv.isna())).all(), f"{case}: {col}"
+    if tolerance_s is not None:
+        # the cut really bites on this fixture, so the case is not vacuous
+        assert want["profile_ts"].isna().sum() > _golden_merge_asof(
+            transcripts_pdf, profiles_pdf
+        )["profile_ts"].isna().sum()

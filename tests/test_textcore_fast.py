@@ -83,17 +83,58 @@ def test_sigma_context():
     _assert_equal(["ΑΣ", "ΣΑ", "Σ", "ΑΣ ΒΣ", "aΣ", "Σ1"])
 
 
-def test_exhaustive_single_codepoints():
-    """Every codepoint below 0x3200 plus the letterlike/numeral blocks as a
-    1-char document: fast ≡ slow.  Catches any future per-codepoint table
-    drift without waiting for a lucky hypothesis draw."""
+def _named_codepoints() -> list[int]:
+    """Every named codepoint below 0x3200 plus the letterlike/numeral and
+    halfwidth/fullwidth blocks."""
     ranges = [(0x20, 0x3200), (0x2100, 0x2190), (0xFF00, 0x10000)]
     cps = [cp for lo, hi in ranges for cp in range(lo, hi)]
-    texts = [chr(cp) for cp in cps if unicodedata.name(chr(cp), "")]
+    return [cp for cp in cps if unicodedata.name(chr(cp), "")]
+
+
+def test_exhaustive_single_codepoints():
+    """Every codepoint of _named_codepoints as a 1-char document: fast ≡
+    slow.  Catches any future per-codepoint table drift without waiting for
+    a lucky hypothesis draw."""
+    texts = [chr(cp) for cp in _named_codepoints()]
     fast = tcf.batch_rant_stats(texts).to_numpy()
     slow = _slow(texts).to_numpy()
     bad = np.flatnonzero(~np.all(np.isclose(fast, slow), axis=1))
     assert bad.size == 0, f"divergent codepoints: {[hex(ord(texts[i])) for i in bad[:20]]}"
+
+
+def test_dense_tables_match_lookup():
+    """The dense per-codepoint tables hold exactly what _lookup computes:
+    raw class, lowercase-expansion length, and the five token-type flags
+    as bits of one byte."""
+    cps = _named_codepoints()
+    cls, low_len, flags = tcf._TABLES.gather(np.array(cps, dtype=np.uint32))
+    for cp, c, ln, f in zip(cps, cls.tolist(), low_len.tolist(), flags.tolist()):
+        want = tcf._lookup(cp)
+        got = (c, ln, *[bool(f >> b & 1) for b in range(5)])
+        assert got == want, f"{hex(cp)}: tables {got} != _lookup {want}"
+
+
+def test_scrub_is_per_document():
+    """textcore.scrub_newlines runs per text: a backslash ending one text
+    and an 'n' starting the next must NOT form a backslash-'n' pair in the
+    concatenated batch."""
+    _assert_equal(["a\\", "nb"])
+    _assert_equal(["\\", "n", "\\", "n\\n"])
+
+
+def test_scrub_order_edge_cases():
+    """scrub_newlines order: '\\n' → ' ', then backslash+'n' → ' ', then
+    drop '\\r' — so a '\\r' between backslash and 'n' does not make a pair,
+    and a doubled backslash pairs only its second half with the 'n'."""
+    _assert_equal(["\\\\n", "x\\\\nx", "\r\n", "a\r\nb", "\\\rn", "a\\\rnb"])
+    _assert_equal(["\nstart", "mid", "end\n"])  # newline at batch start/end
+    _assert_equal(["\n"])
+    _assert_equal(["\\n\\n\\n", "\\nn", "\\\\\\n"])
+
+
+def test_none_and_empty_mixed():
+    _assert_equal([None, "", "a\\", None, "nb", "", "\r", None, "ｶﾞ"])
+    _assert_equal(["", None, ""])
 
 
 def test_datagen_corpus():
