@@ -5,35 +5,25 @@ and the greatest ``right.ts <= left.ts`` (direction='backward', exact matches
 allowed).  Zero temporal leakage by construction: a right row with
 ``ts > left.ts`` can never be selected.
 
-Physical strategies (scale-first):
-  * :func:`asof_join_union_window` (the pipeline default, JVM only): the
-    right side is hash-partitioned on ``by`` and unioned with the left; one
-    window pass on ``by`` forward-fills the matched right row.  When the
-    left already carries ``hashpartitioning(by)`` — a window chain on
-    ``by`` upstream — the union keeps that partitioning, so the as-of
-    window only sorts and ONLY the small right side shuffles (the
-    co-partition-once plan of temporal-join processing); a left side
-    without it gets one Exchange over the union;
-  * :func:`asof_join` (cogroup): both sides are hash-partitioned on
-    ``pmod(xxhash64(key), num_buckets)`` via ``groupBy(bucket).cogroup`` —
-    ONE co-partitioning shuffle each, no broadcast of the big side, no row
-    explosion (unlike a range-join + dedup, which shuffles |matches| rows);
-    ``num_buckets`` decouples task count from key cardinality, and inside
-    each bucket a single vectorized ``pd.merge_asof(by=key)`` runs a
-    sort-merge in C — no per-row Python (input_hint);
-  * either way a mega-key cannot straddle partitions (placement is a
-    function of the key), so results are exact under skew; AQE handles
-    residual partition imbalance.
+Physical strategy (:func:`asof_join_union_window`, JVM only): the right side
+is hash-partitioned on ``by`` and unioned with the left; one window pass on
+``by`` forward-fills the matched right row.  When the left already carries
+``hashpartitioning(by)`` — a window chain on ``by`` upstream — the union
+keeps that partitioning, so the as-of window only sorts and ONLY the small
+right side shuffles (the co-partition-once plan of temporal-join
+processing); a left side without it gets one Exchange over the union.  A
+mega-key cannot straddle partitions (placement is a function of the key),
+so results are exact under skew; AQE handles residual partition imbalance.
+Not a cogroup + per-key ``pd.merge_asof``: that ships every left column
+through Arrow, and measured slower both on mega-conversation transcripts
+and at sf0.1.
 """
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-
-_BUCKET = "__asof_bucket"
 
 
 def asof_join_union_window(
@@ -44,8 +34,13 @@ def asof_join_union_window(
     right_ts_alias: str | None = None,
     tolerance_s: int | None = None,
 ) -> DataFrame:
-    """Backward as-of join with identical semantics to :func:`asof_join`,
-    implemented entirely JVM-side (the pipeline default).
+    """Backward as-of join of ``right`` onto ``left`` on (by, on): the
+    contract is ``pd.merge_asof(direction="backward",
+    allow_exact_matches=True)`` — what ``golden.golden_asof`` computes.
+    Right's ``on`` column is kept as ``right_ts_alias`` (default
+    ``f"{on}_right"``) so leakage is auditable downstream.
+    ``tolerance_s``: optional max staleness — a match older than this many
+    seconds is dropped whole (pd.merge_asof tolerance).
 
     Strategy: tag and union both sides, then one window pass
     ``partitionBy(by).orderBy(on, side)`` forward-fills a single struct of
@@ -55,11 +50,11 @@ def asof_join_union_window(
     right column comes from the same matched row, including its NULLs);
     finally keep only left rows and unpack the struct.
 
-    vs the cogroup/merge_asof variant: no Arrow round-trip of the (wide)
-    left columns, whole-stage-codegen window, and a left side that is
-    already hash-partitioned on ``by`` (by upstream windows) is not
-    shuffled again — only the right side is.  Ties among right rows at the
-    same (by, on) resolve to the last in order — same as merge_asof.
+    No Arrow round-trip of the (wide) left columns, a whole-stage-codegen
+    window, and a left side that is already hash-partitioned on ``by`` (by
+    upstream windows) is not shuffled again — only the right side is.
+    Ties among right rows at the same (by, on) resolve to the last in
+    order — same as merge_asof.
     """
     right_ts_alias = right_ts_alias or f"{on}_right"
     rv_names = [f.name for f in right.schema.fields if f.name not in (by, on)]
@@ -124,88 +119,4 @@ def asof_join_union_window(
         *[c for c in left.columns],
         F.col("__rstruct.__rts").alias(right_ts_alias),
         *[F.col(f"__rstruct.{c}").alias(c) for c in rv_names],
-    )
-
-
-def _pandas_dtype(spark_type: T.DataType) -> str | None:
-    """Nullable pandas dtype for right-side columns that may become null."""
-    if isinstance(spark_type, (T.ByteType, T.ShortType, T.IntegerType)):
-        return "Int32"
-    if isinstance(spark_type, T.LongType):
-        return "Int64"
-    if isinstance(spark_type, T.BooleanType):
-        return "boolean"
-    if isinstance(spark_type, (T.FloatType, T.DoubleType)):
-        return "float64"
-    return None
-
-
-def asof_join(
-    left: DataFrame,
-    right: DataFrame,
-    on: str = "ts",
-    by: str = "conv_id",
-    right_ts_alias: str | None = None,
-    num_buckets: int | None = None,
-    tolerance_s: int | None = None,
-) -> DataFrame:
-    """Backward as-of join of ``right`` onto ``left`` on (by, on).
-
-    Right's ``on`` column is kept as ``right_ts_alias`` (default
-    ``f"{on}_right"``) so leakage is auditable downstream.
-    ``tolerance_s``: optional max staleness — matches older than this many
-    seconds are dropped (pd.merge_asof tolerance).
-    """
-    right_ts_alias = right_ts_alias or f"{on}_right"
-    if num_buckets is None:
-        num_buckets = int(left.sparkSession.conf.get("spark.sql.shuffle.partitions", "32"))
-
-    right_value_fields = [f for f in right.schema.fields if f.name not in (by, on)]
-    out_fields = list(left.schema.fields)
-    out_fields.append(T.StructField(right_ts_alias, right.schema[on].dataType, True))
-    for f in right_value_fields:
-        out_fields.append(T.StructField(f.name, f.dataType, True))
-    out_schema = T.StructType(out_fields)
-
-    left_cols = [f.name for f in left.schema.fields]
-    rv_names = [f.name for f in right_value_fields]
-    rv_dtypes = {f.name: _pandas_dtype(f.dataType) for f in right_value_fields}
-    rv_dtypes[right_ts_alias] = None
-    tol = pd.Timedelta(seconds=tolerance_s) if tolerance_s is not None else None
-
-    def merge(lpdf: pd.DataFrame, rpdf: pd.DataFrame) -> pd.DataFrame:
-        lpdf = lpdf.drop(columns=[_BUCKET]).sort_values(on, kind="mergesort")
-        if rpdf.empty:
-            out = lpdf.copy()
-            out[right_ts_alias] = pd.NaT
-            for c in rv_names:
-                out[c] = None
-        else:
-            rpdf = (
-                rpdf.drop(columns=[_BUCKET])
-                .rename(columns={on: right_ts_alias})
-                .sort_values(right_ts_alias, kind="mergesort")
-            )
-            out = pd.merge_asof(
-                lpdf,
-                rpdf,
-                left_on=on,
-                right_on=right_ts_alias,
-                by=by,
-                direction="backward",
-                allow_exact_matches=True,
-                tolerance=tol,
-            )
-        for c, dt in rv_dtypes.items():
-            if dt is not None:
-                out[c] = out[c].astype(dt)
-        return out[[f.name for f in out_fields]]
-
-    bucket = F.pmod(F.xxhash64(F.col(by)), F.lit(num_buckets))
-    lb = left.withColumn(_BUCKET, bucket)
-    rb = right.select(by, on, *rv_names).withColumn(_BUCKET, bucket)
-    return (
-        lb.groupBy(_BUCKET)
-        .cogroup(rb.groupBy(_BUCKET))
-        .applyInPandas(lambda l, r: merge(l, r), schema=out_schema)
     )

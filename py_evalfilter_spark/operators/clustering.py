@@ -67,6 +67,13 @@ def _centroid_df(spark, centroids: list[list[float]]) -> DataFrame:
 ARROW_ASSIGN_MIN_K = 32
 
 
+def _use_arrow(k: int) -> bool:
+    """The one kernel-selection point for assign, fit and pairs: the Arrow
+    kernels from ARROW_ASSIGN_MIN_K centroids up, the join plans below
+    (the constant is read at call time)."""
+    return k >= ARROW_ASSIGN_MIN_K
+
+
 def _assign_join(d: DataFrame, centroids: list[list[float]], id_col: str) -> DataFrame:
     """Nearest centroid via broadcast crossJoin + struct-min argmin.  The
     vector rides THROUGH the argmin aggregation (any_value is
@@ -230,33 +237,19 @@ def _assign_topm_arrow(
 
 
 def _assign_topm(
-    d: DataFrame, centroids: list[list[float]], id_col: str, m: int,
-    method: str = "auto",
+    d: DataFrame, centroids: list[list[float]], id_col: str, m: int
 ) -> DataFrame:
-    if method == "auto":
-        method = "arrow" if len(centroids) >= ARROW_ASSIGN_MIN_K else "join"
-    if method == "arrow":
+    if _use_arrow(len(centroids)):
         return _assign_topm_arrow(d, centroids, id_col, m)
-    if method == "join":
-        return _assign_topm_join(d, centroids, id_col, m)
-    raise ValueError(f"unknown assign method {method!r}")
+    return _assign_topm_join(d, centroids, id_col, m)
 
 
-def _assign(
-    d: DataFrame, centroids: list[list[float]], id_col: str,
-    method: str = "auto",
-) -> DataFrame:
+def _assign(d: DataFrame, centroids: list[list[float]], id_col: str) -> DataFrame:
     """(id, vec, cluster, dist2) — nearest centroid by L2², ties to the
-    lowest cid.  method: 'join' (broadcast crossJoin — the oracle-mirrored
-    plan), 'arrow' (vectorized matmul), or 'auto' (arrow once k ≥
-    ARROW_ASSIGN_MIN_K)."""
-    if method == "auto":
-        method = "arrow" if len(centroids) >= ARROW_ASSIGN_MIN_K else "join"
-    if method == "arrow":
+    lowest cid."""
+    if _use_arrow(len(centroids)):
         return _assign_arrow(d, centroids, id_col)
-    if method == "join":
-        return _assign_join(d, centroids, id_col)
-    raise ValueError(f"unknown assign method {method!r}")
+    return _assign_join(d, centroids, id_col)
 
 
 def kmeans_fit(
@@ -267,7 +260,6 @@ def kmeans_fit(
     iters: int = 3,
     seed: int = 42,
     round_decimals: int = 6,
-    assign_method: str = "auto",
     pin_input: bool = True,
 ) -> list[list[float]]:
     """Fixed-iteration deterministic Lloyd's; returns the k centroids
@@ -302,11 +294,8 @@ def kmeans_fit(
                 f"kmeans_fit: k={k} but the input has only {len(seeds)} rows"
             )
         centroids = [[round(float(x), round_decimals) for x in r["vec"]] for r in seeds]
-        method = assign_method
-        if method == "auto":
-            method = "arrow" if k >= ARROW_ASSIGN_MIN_K else "join"
         for _ in range(iters):
-            if method == "arrow":
+            if _use_arrow(k):
                 # fused assign+partial-update: one map pass, micro-shuffle
                 rows = (
                     _update_partials_arrow(d, centroids)
@@ -315,7 +304,7 @@ def kmeans_fit(
                     .collect()
                 )
             else:
-                assigned = _assign(d, centroids, "_kid", method=method)
+                assigned = _assign_join(d, centroids, "_kid")
                 rows = (
                     assigned.select("cluster", F.posexplode("vec").alias("dim", "val"))
                     .groupBy("cluster", "dim")
@@ -339,14 +328,13 @@ def assign_clusters(
     centroids: list[list[float]],
     vec_col: str = "embedding",
     id_col: str = "vec_id",
-    assign_method: str = "auto",
 ) -> DataFrame:
     """df + (cluster, dist2) under fixed centroids."""
     d = df.select(
         F.col(id_col).alias("_kid"),
         F.transform(vec_col, lambda x: x.cast("double")).alias("vec"),
     )
-    out = _assign(d, centroids, "_kid", method=assign_method).select(
+    out = _assign(d, centroids, "_kid").select(
         F.col("_kid").alias(id_col), "cluster", F.round("dist2", 4).alias("dist2")
     )
     return df.join(out, id_col)
@@ -367,6 +355,46 @@ def _sim_hits(S: "np.ndarray", threshold: float):
     return rr[keep], cc[keep], vals[keep]
 
 
+def _pairs_frame(out_a: list, out_b: list, out_s: list) -> pd.DataFrame:
+    if not out_a:
+        return pd.DataFrame({"doc_id": [], "dup_id": [], "cosine": []})
+    return pd.DataFrame(
+        {
+            "doc_id": np.concatenate(out_a),
+            "dup_id": np.concatenate(out_b),
+            "cosine": np.concatenate(out_s),
+        }
+    )
+
+
+def _bucket_pairs(pdf: pd.DataFrame, threshold: float) -> pd.DataFrame:
+    """One bucket's cosine≥threshold pairs, doc_id < dup_id: the strict
+    upper triangle of its similarity matrix, row-blocked so ≤4M doubles
+    (32 MB) are in flight per task regardless of bucket size.  Shared by
+    _pairs_arrow and the diagonal tiles of _pairs_arrow_tiled."""
+    n = len(pdf)
+    out_a, out_b, out_s = [], [], []
+    if n < 2:
+        return _pairs_frame(out_a, out_b, out_s)
+    pdf = pdf.sort_values("doc_id", kind="mergesort")
+    X = np.stack(pdf["vec"].to_numpy()).astype(np.float64, copy=False)
+    ids = pdf["doc_id"].to_numpy()
+    norms = np.sqrt((X * X).sum(axis=1))
+    block = max(16, 4_000_000 // n)
+    with np.errstate(divide="ignore", invalid="ignore"):
+        for i0 in range(0, n - 1, block):
+            i1 = min(i0 + block, n)
+            S = (X[i0:i1] @ X.T) / np.outer(norms[i0:i1], norms)
+            rr, cc, vals = _sim_hits(S, threshold)  # nan → False, like JVM null
+            keep = cc > rr + i0  # strict upper triangle: doc_id < dup_id
+            rr, cc, vals = rr[keep], cc[keep], vals[keep]
+            if len(rr):
+                out_a.append(ids[rr + i0])
+                out_b.append(ids[cc])
+                out_s.append(vals)
+    return _pairs_frame(out_a, out_b, out_s)
+
+
 def _pairs_arrow(assigned: DataFrame, threshold: float) -> DataFrame:
     """Within-(cluster, sub) cosine≥threshold pairs via grouped
     applyInPandas: each bucket's all-pairs is one BLAS matmul instead of
@@ -381,42 +409,9 @@ def _pairs_arrow(assigned: DataFrame, threshold: float) -> DataFrame:
     tests/test_dedup_similarity.py::test_semdedup_pairs_arrow_join_parity."""
     id_type = assigned.schema["doc_id"].dataType.simpleString()
     schema = f"doc_id {id_type}, dup_id {id_type}, cosine double"
-
-    def emit(pdf: pd.DataFrame) -> pd.DataFrame:
-        empty = pd.DataFrame({"doc_id": [], "dup_id": [], "cosine": []})
-        n = len(pdf)
-        if n < 2:
-            return empty
-        pdf = pdf.sort_values("doc_id", kind="mergesort")
-        X = np.stack(pdf["vec"].to_numpy()).astype(np.float64, copy=False)
-        ids = pdf["doc_id"].to_numpy()
-        norms = np.sqrt((X * X).sum(axis=1))
-        # row-block the n×n similarity matrix: ≤4M doubles (32 MB) in
-        # flight per task regardless of bucket size
-        block = max(16, 4_000_000 // n)
-        out_a, out_b, out_s = [], [], []
-        with np.errstate(divide="ignore", invalid="ignore"):
-            for i0 in range(0, n - 1, block):
-                i1 = min(i0 + block, n)
-                S = (X[i0:i1] @ X.T) / np.outer(norms[i0:i1], norms)
-                rr, cc, vals = _sim_hits(S, threshold)  # nan → False, like JVM null
-                keep = cc > rr + i0  # strict upper triangle: doc_id < dup_id
-                rr, cc, vals = rr[keep], cc[keep], vals[keep]
-                if len(rr):
-                    out_a.append(ids[rr + i0])
-                    out_b.append(ids[cc])
-                    out_s.append(vals)
-        if not out_a:
-            return empty
-        return pd.DataFrame(
-            {
-                "doc_id": np.concatenate(out_a),
-                "dup_id": np.concatenate(out_b),
-                "cosine": np.concatenate(out_s),
-            }
-        )
-
-    return assigned.groupBy("cluster", "sub").applyInPandas(emit, schema)
+    return assigned.groupBy("cluster", "sub").applyInPandas(
+        lambda pdf: _bucket_pairs(pdf, threshold), schema
+    )
 
 
 def _pairs_arrow_tiled(
@@ -472,49 +467,21 @@ def _pairs_arrow_tiled(
     schema = f"doc_id {id_type}, dup_id {id_type}, cosine double"
 
     def emit(key, pdf):
-        empty = pd.DataFrame({"doc_id": [], "dup_id": [], "cosine": []})
         ti, tj = int(key[2]), int(key[3])
+        if ti == tj:
+            return _bucket_pairs(pdf, threshold)
+        a = pdf[pdf["blk"] == ti]
+        b = pdf[pdf["blk"] == tj]
+        out_a, out_b, out_s = [], [], []
+        if not len(a) or not len(b):
+            return _pairs_frame(out_a, out_b, out_s)
+        XA = np.stack(a["vec"].to_numpy()).astype(np.float64, copy=False)
+        XB = np.stack(b["vec"].to_numpy()).astype(np.float64, copy=False)
+        ia, ib = a["doc_id"].to_numpy(), b["doc_id"].to_numpy()
+        na = np.sqrt((XA * XA).sum(axis=1))
+        nb_ = np.sqrt((XB * XB).sum(axis=1))
+        block = max(16, 4_000_000 // max(len(b), 1))
         with np.errstate(divide="ignore", invalid="ignore"):
-            if ti == tj:
-                n = len(pdf)
-                if n < 2:
-                    return empty
-                pdf = pdf.sort_values("doc_id", kind="mergesort")
-                X = np.stack(pdf["vec"].to_numpy()).astype(np.float64, copy=False)
-                ids = pdf["doc_id"].to_numpy()
-                norms = np.sqrt((X * X).sum(axis=1))
-                block = max(16, 4_000_000 // n)
-                out_a, out_b, out_s = [], [], []
-                for i0 in range(0, n - 1, block):
-                    i1 = min(i0 + block, n)
-                    S = (X[i0:i1] @ X.T) / np.outer(norms[i0:i1], norms)
-                    rr, cc, vals = _sim_hits(S, threshold)
-                    keep = cc > rr + i0
-                    rr, cc, vals = rr[keep], cc[keep], vals[keep]
-                    if len(rr):
-                        out_a.append(ids[rr + i0])
-                        out_b.append(ids[cc])
-                        out_s.append(vals)
-                if not out_a:
-                    return empty
-                return pd.DataFrame(
-                    {
-                        "doc_id": np.concatenate(out_a),
-                        "dup_id": np.concatenate(out_b),
-                        "cosine": np.concatenate(out_s),
-                    }
-                )
-            a = pdf[pdf["blk"] == ti]
-            b = pdf[pdf["blk"] == tj]
-            if not len(a) or not len(b):
-                return empty
-            XA = np.stack(a["vec"].to_numpy()).astype(np.float64, copy=False)
-            XB = np.stack(b["vec"].to_numpy()).astype(np.float64, copy=False)
-            ia, ib = a["doc_id"].to_numpy(), b["doc_id"].to_numpy()
-            na = np.sqrt((XA * XA).sum(axis=1))
-            nb_ = np.sqrt((XB * XB).sum(axis=1))
-            block = max(16, 4_000_000 // max(len(b), 1))
-            out_a, out_b, out_s = [], [], []
             for i0 in range(0, len(a), block):
                 i1 = min(i0 + block, len(a))
                 S = (XA[i0:i1] @ XB.T) / np.outer(na[i0:i1], nb_)
@@ -524,15 +491,7 @@ def _pairs_arrow_tiled(
                     out_a.append(np.minimum(x, y))
                     out_b.append(np.maximum(x, y))
                     out_s.append(vals)
-            if not out_a:
-                return empty
-            return pd.DataFrame(
-                {
-                    "doc_id": np.concatenate(out_a),
-                    "dup_id": np.concatenate(out_b),
-                    "cosine": np.concatenate(out_s),
-                }
-            )
+        return _pairs_frame(out_a, out_b, out_s)
 
     return tiled.groupBy("cluster", "sub", "ti", "tj").applyInPandas(emit, schema)
 
@@ -546,7 +505,6 @@ def semdedup_pairs(
     pins=None,
     max_cluster_size: int | None = 100_000,
     max_candidate_mass: int | None = None,
-    pair_method: str = "auto",
     tile_size: int | None = 4096,
     multi_assign: int = 1,
 ) -> DataFrame:
@@ -582,14 +540,13 @@ def semdedup_pairs(
     SCALE WITH n (Abbas et al. use n/k around 10^3); this guard is what
     tells you yours doesn't.
 
-    `pair_method`: 'join' (cluster self-join + JVM cosine — the
-    oracle-mirrored plan), 'arrow' (grouped applyInPandas, one BLAS
-    matmul per bucket — measured 371.8 s → 28.1 s on 572M candidates at
-    1M×64-dim/k=1024, identical output), or 'auto' (arrow once
-    k ≥ ARROW_ASSIGN_MIN_K, so the small-k catalog query keeps the
-    oracle-mirrored join plan).
+    Pair kernel: from k ≥ ARROW_ASSIGN_MIN_K a grouped applyInPandas runs
+    one BLAS matmul per bucket (measured 371.8 s → 28.1 s against the
+    cluster self-join on 572M candidates at 1M×64-dim/k=1024, identical
+    output); smaller k keeps the self-join + JVM cosine, so the small-k
+    catalog query runs the oracle-mirrored plan.
 
-    `tile_size` (arrow path only; None disables): a bucket whose pair
+    `tile_size` (Arrow kernel only; None disables): a bucket whose pair
     mass exceeds the per-core share of the stage's total work splits into
     EXACT (ti ≤ tj) tile tasks (_pairs_arrow_tiled) so no single cluster
     serializes the stage tail — unlike salting this loses no pairs; it
@@ -697,11 +654,7 @@ def semdedup_pairs(
                 ).cast("int"),
             ).otherwise(F.lit(0))
     assigned = assigned.withColumn("sub", sub)
-    if pair_method == "auto":
-        pair_method = (
-            "arrow" if len(centroids) >= ARROW_ASSIGN_MIN_K else "join"
-        )
-    if pair_method == "arrow":
+    if _use_arrow(len(centroids)):
         if tile_size:
             if sizes is None:
                 sizes = {
@@ -738,8 +691,6 @@ def semdedup_pairs(
             if tiles:
                 return dedup_pairs(_pairs_arrow_tiled(assigned, threshold, tiles))
         return dedup_pairs(_pairs_arrow(assigned, threshold))
-    if pair_method != "join":
-        raise ValueError(f"unknown pair method {pair_method!r}")
     l, r = assigned.alias("l"), assigned.alias("r")
     return dedup_pairs(
         l.join(

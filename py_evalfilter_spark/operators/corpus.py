@@ -172,9 +172,9 @@ def _exploded_ngrams(df: DataFrame, n: int, text_col: str, *keep_cols: str) -> D
 
 # Benchmark gram sets are small by nature (eval suites, not corpora), but
 # an adversarially large "benchmark" must not OOM executors through an
-# unconditional broadcast — same gate idiom as DUPGRAM_BROADCAST_MAX_ROWS /
-# LM_BROADCAST_MAX_ROWS: one bounded count action on the distinct gram set,
-# shuffle join above the limit with identical output (VERDICT r5 #3).
+# unconditional broadcast — same gate idiom as LM_BROADCAST_MAX_ROWS: one
+# bounded count action on the distinct gram set, shuffle join above the
+# limit with identical output (VERDICT r5 #3).
 BENCHGRAM_BROADCAST_MAX_ROWS = 2_000_000
 
 
@@ -811,21 +811,12 @@ def _positioned_ngrams(df: DataFrame, n: int, text_col: str, id_col: str) -> Dat
     ).select(id_col, F.col("_g.pos").alias("pos"), F.col("_g.gh").alias("gh"))
 
 
-# dup-gram sets small enough to broadcast to every executor: 2M ghs ≈
-# 90 MB of md5 strings — the same bounded-broadcast discipline as
-# LM_BROADCAST_MAX_ROWS (an adversarial fully-duplicated corpus degrades
-# to a shuffle join, never an executor OOM)
-DUPGRAM_BROADCAST_MAX_ROWS = 2_000_000
-
-
 def duplicate_spans(
     df: DataFrame,
     n: int = 8,
     min_count: int = 2,
     id_col: str = "doc_id",
     text_col: str = "text",
-    count_method: str = "auto",
-    pins=None,
 ) -> DataFrame:
     """Maximal duplicated word spans per document: every word n-gram whose
     exact text occurs >= min_count times ANYWHERE in the corpus marks its
@@ -846,50 +837,16 @@ def duplicate_spans(
     Interval merge is the standard running-max island trick: a span opens
     where its start exceeds max(end)+1 over all earlier spans in the doc.
 
-    `count_method` picks how the corpus-wide frequency reaches each gram:
-      * 'window' / 'auto' — COUNT(*) OVER (PARTITION BY gh): ONE shuffle
-        of the (id, pos, gh) stream, sorted by gh.  The oracle-mirrored
-        plan, and the MEASURED winner (see below).
-      * 'join' — groupBy(gh).count().filter(≥ min_count), then join the
-        gram stream against the DUPLICATED-gram set only; the dup set
-        broadcasts when ≤ DUPGRAM_BROADCAST_MAX_ROWS (one bounded count
-        action on the pinned set), so no gram row shuffles for the match.
-        Sounds strictly better — it is NOT: the gram stream has to be
-        GENERATED twice (once for the counts, once for the join probe),
-        and gram generation (tokenize + slice + md5 × corpus) dominates
-        the stage.  Measured at 1M docs / ~200M grams, local[32]:
-        window 45.9-55.7 s vs join 85.3-90.0 s — the extra explode costs
-        ~2× more than the positions-through-the-sort it saves.  Pinning
-        the gram stream instead would persist ~12 GB to trade the same
-        CPU for storage I/O.  'join' stays available for corpora whose
-        economics invert (very long docs → few grams per byte, or a
-        shuffle-starved cluster); values are identical either way."""
+    The frequency is a COUNT(*) OVER (PARTITION BY gh) window, not a
+    groupBy-count joined back: that join has to generate the gram stream
+    twice, and gram generation dominates the stage (measured at 1M docs,
+    local[32]: window 45.9-55.7 s vs join 85.3-90.0 s)."""
     from pyspark.sql import Window
 
-    from ..pinning import pin as _pin
-
     grams = _positioned_ngrams(df, n, text_col, id_col)
-    if count_method in ("window", "auto"):
-        cnt = grams.withColumn(
-            "c", F.count(F.lit(1)).over(Window.partitionBy("gh"))
-        )
-        dup_marks = cnt.filter(F.col("c") >= min_count)
-    elif count_method == "join":
-        dup_ghs = _pin(
-            grams.groupBy("gh")
-            .agg(F.count(F.lit(1)).alias("c"))
-            .filter(F.col("c") >= min_count)
-            .select("gh"),
-            pins,
-        )
-        rhs = (
-            F.broadcast(dup_ghs)
-            if dup_ghs.count() <= DUPGRAM_BROADCAST_MAX_ROWS
-            else dup_ghs
-        )
-        dup_marks = grams.join(rhs, "gh")
-    else:
-        raise ValueError(f"unknown count_method {count_method!r}")
+    dup_marks = grams.withColumn(
+        "c", F.count(F.lit(1)).over(Window.partitionBy("gh"))
+    ).filter(F.col("c") >= min_count)
     dup = dup_marks.select(
         id_col, F.col("pos").alias("s"), (F.col("pos") + (n - 1)).alias("e")
     )
@@ -923,14 +880,12 @@ def dup_span_stats(
     min_count: int = 2,
     id_col: str = "doc_id",
     text_col: str = "text",
-    count_method: str = "auto",
-    pins=None,
 ) -> DataFrame:
     """Per-document duplicated-span rollup over duplicate_spans:
     (id, n_spans, dup_words, n_words, dup_frac) for documents with >= 1
     duplicated span.  dup_frac is the usual removal-decision diagnostic
     (Lee et al. drop or trim by duplicated fraction)."""
-    spans = duplicate_spans(df, n, min_count, id_col, text_col, count_method, pins)
+    spans = duplicate_spans(df, n, min_count, id_col, text_col)
     lens = df.select(id_col, F.size(_words(text_col)).alias("n_words"))
     agg = spans.groupBy(id_col).agg(
         F.count(F.lit(1)).alias("n_spans"),
@@ -953,8 +908,6 @@ def remove_duplicate_spans(
     min_count: int = 2,
     id_col: str = "doc_id",
     text_col: str = "text",
-    count_method: str = "auto",
-    pins=None,
 ) -> DataFrame:
     """df with `text_col` rewritten to the word sequence OUTSIDE every
     duplicated span (Lee et al.'s ExactSubstr-cut), plus n_words_kept.
@@ -965,7 +918,7 @@ def remove_duplicate_spans(
     The rebuild collects each doc's surviving (idx, word) pairs into one
     array — bounded by the document length, the same per-doc memory
     contract every text operator here already has."""
-    spans = duplicate_spans(df, n, min_count, id_col, text_col, count_method, pins)
+    spans = duplicate_spans(df, n, min_count, id_col, text_col)
     cov = spans.select(
         id_col,
         F.explode(

@@ -1357,33 +1357,6 @@ class TestUpsampleSources:
         assert "Exchange hashpartitioning" not in plan
 
 
-class TestDupSpanCountMethods:
-    def test_join_method_matches_window(self, spark):
-        docs = spark.createDataFrame(
-            [
-                (1, "a b c d e f g h tail one"),
-                (2, "x a b c d e f g h y"),
-                (3, "totally different words with no eight gram shared here"),
-                (4, "a b c d e f g h a b c d e f g h"),
-            ],
-            "doc_id long, text string",
-        )
-        w = sorted(
-            map(tuple, corpus_ops.dup_span_stats(docs, n=8, count_method="window").collect())
-        )
-        j = sorted(
-            map(tuple, corpus_ops.dup_span_stats(docs, n=8, count_method="join").collect())
-        )
-        assert w == j and len(w) > 0
-
-    def test_unknown_method_raises(self, spark):
-        docs = spark.createDataFrame([(1, "a b")], "doc_id long, text string")
-        import pytest as _pytest
-
-        with _pytest.raises(ValueError):
-            corpus_ops.duplicate_spans(docs, count_method="nope").collect()
-
-
 class TestPerplexityBuckets:
     def _scored(self, spark, vals):
         from pyspark.sql import functions as F2

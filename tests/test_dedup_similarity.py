@@ -765,6 +765,16 @@ class TestMinhashWordUnit:
         )
 
 
+def _force_kernel(monkeypatch, kernel: str) -> None:
+    """Move clustering's one k-selection point so every k runs `kernel`
+    ('join' or 'arrow') for assign, fit and pairs alike."""
+    from py_evalfilter_spark.operators import clustering
+
+    monkeypatch.setattr(
+        clustering, "ARROW_ASSIGN_MIN_K", 1 if kernel == "arrow" else 10**9
+    )
+
+
 class TestClustering:
     def test_kmeans_matches_numpy_reference(self, spark):
         """The Spark fit (md5 init, per-iteration rounding, empty-cluster
@@ -884,7 +894,7 @@ class TestClustering:
         want = [r["r"] for r in sorted(rows, key=lambda r: r["i"])]
         assert [float(x) for x in got] == want
 
-    def test_semdedup_multi_assign_recovers_boundary_pair(self, spark):
+    def test_semdedup_multi_assign_recovers_boundary_pair(self, spark, monkeypatch):
         """VERDICT r5 #8: a near-dup pair split by a cluster boundary
         (each member's argmin centroid differs, second-nearest shared) is
         invisible to single-assign semdedup and recovered by
@@ -903,8 +913,9 @@ class TestClustering:
         single = clustering.semdedup_pairs(emb, cents, threshold=0.999).collect()
         assert single == []
         for method in ("join", "arrow"):
+            _force_kernel(monkeypatch, method)
             got = clustering.semdedup_pairs(
-                emb, cents, threshold=0.999, multi_assign=2, pair_method=method
+                emb, cents, threshold=0.999, multi_assign=2
             ).collect()
             assert [(r["doc_id"], r["dup_id"]) for r in got] == [(0, 1)], method
 
@@ -941,7 +952,7 @@ class TestClustering:
         assert len(rows) == len({(r["doc_id"], r["dup_id"]) for r in rows})
 
     def test_assign_topm_join_arrow_parity(self, spark):
-        """_assign_topm's two methods agree on the SET of (id, cluster)
+        """_assign_topm's two kernels agree on the SET of (id, cluster)
         entries (same round(…,8) distance contract, stable tie-break to
         the lowest cid on both sides)."""
         from py_evalfilter_spark.operators import clustering
@@ -955,50 +966,42 @@ class TestClustering:
         for m in (2, 3):
             a_join = sorted(
                 (r["doc_id"], r["cluster"])
-                for r in clustering._assign_topm(
-                    d, cents, "doc_id", m, method="join"
-                ).collect()
+                for r in clustering._assign_topm_join(d, cents, "doc_id", m).collect()
             )
             a_arrow = sorted(
                 (r["doc_id"], r["cluster"])
-                for r in clustering._assign_topm(
-                    d, cents, "doc_id", m, method="arrow"
-                ).collect()
+                for r in clustering._assign_topm_arrow(d, cents, "doc_id", m).collect()
             )
             assert a_join == a_arrow, m
 
-    def test_assign_arrow_join_parity(self, spark):
+    def test_assign_arrow_join_parity(self, spark, monkeypatch):
         """The vectorized Arrow assign (BLAS matmul) must reproduce the
         broadcast-crossJoin assign bit-for-bit under the round(…,8)
         contract: identical centroids out of the fit and identical
         (id, cluster, dist2) assignments, at a k large enough that the
-        auto path picks arrow."""
+        k-selection point picks arrow."""
         from py_evalfilter_spark.operators import clustering
 
+        assert clustering.ARROW_ASSIGN_MIN_K <= 64  # arrow engages at scale
         emb = spark.read.parquet(f"{SF}/embeddings.parquet")
-        c_join = clustering.kmeans_fit(
-            emb, k=8, iters=2, seed=42, assign_method="join"
-        )
-        c_arrow = clustering.kmeans_fit(
-            emb, k=8, iters=2, seed=42, assign_method="arrow"
-        )
-        assert c_join == c_arrow
+        _force_kernel(monkeypatch, "join")
+        c_join = clustering.kmeans_fit(emb, k=8, iters=2, seed=42)
         a_join = sorted(
             map(tuple,
-                clustering.assign_clusters(
-                    emb, c_join, assign_method="join"
-                ).select("vec_id", "cluster", "dist2").collect())
+                clustering.assign_clusters(emb, c_join)
+                .select("vec_id", "cluster", "dist2").collect())
         )
+        _force_kernel(monkeypatch, "arrow")
+        c_arrow = clustering.kmeans_fit(emb, k=8, iters=2, seed=42)
         a_arrow = sorted(
             map(tuple,
-                clustering.assign_clusters(
-                    emb, c_join, assign_method="arrow"
-                ).select("vec_id", "cluster", "dist2").collect())
+                clustering.assign_clusters(emb, c_join)
+                .select("vec_id", "cluster", "dist2").collect())
         )
+        assert c_join == c_arrow
         assert a_join == a_arrow
-        assert clustering.ARROW_ASSIGN_MIN_K <= 64  # auto engages at scale
 
-    def test_semdedup_pairs_arrow_join_parity(self, spark):
+    def test_semdedup_pairs_arrow_join_parity(self, spark, monkeypatch):
         """The grouped-BLAS pairs stage must reproduce the self-join pairs
         exactly: same (doc_id, dup_id, cosine) set under the round(…,4)
         contract, at a threshold low enough to emit a non-trivial set."""
@@ -1008,16 +1011,15 @@ class TestClustering:
         cents = clustering.kmeans_fit(emb, k=4, iters=2, seed=42)
         got = {}
         for m in ("join", "arrow"):
+            _force_kernel(monkeypatch, m)
             got[m] = sorted(
                 map(tuple,
-                    clustering.semdedup_pairs(
-                        emb, cents, threshold=0.2, pair_method=m
-                    ).collect())
+                    clustering.semdedup_pairs(emb, cents, threshold=0.2).collect())
             )
         assert len(got["join"]) > 0
         assert got["join"] == got["arrow"]
 
-    def test_semdedup_pairs_tiled_parity(self, spark):
+    def test_semdedup_pairs_tiled_parity(self, spark, monkeypatch):
         """Tile-parallel pairs (per-bucket work split into exact ti<=tj
         block tasks) must emit the identical pair SET as the untiled
         arrow path — tiling re-partitions the work, it must not change
@@ -1026,13 +1028,13 @@ class TestClustering:
 
         emb = spark.read.parquet(f"{SF}/embeddings.parquet")
         cents = clustering.kmeans_fit(emb, k=4, iters=2, seed=42)
+        _force_kernel(monkeypatch, "arrow")
         got = {}
         for ts in (None, 16):
             got[ts] = sorted(
                 map(tuple,
                     clustering.semdedup_pairs(
-                        emb, cents, threshold=0.2,
-                        pair_method="arrow", tile_size=ts,
+                        emb, cents, threshold=0.2, tile_size=ts
                     ).collect())
             )
         assert len(got[None]) > 0

@@ -70,7 +70,7 @@ class TestWindowedSpark:
 
 class TestAsofSpark:
     def test_vs_golden(self, transcripts_sdf, profiles_sdf, transcripts_pdf, profiles_pdf):
-        out = asof.asof_join(
+        out = asof.asof_join_union_window(
             transcripts_sdf, profiles_sdf, on="ts", by="conv_id", right_ts_alias="profile_ts"
         ).toPandas()
         gold = golden.golden_asof(transcripts_pdf, profiles_pdf)
@@ -81,18 +81,11 @@ class TestAsofSpark:
         # matched timestamps identical
         assert ((a["profile_ts"] == b["profile_ts"]) | (a["profile_ts"].isna() & b["profile_ts"].isna())).all()
 
-    def test_zero_leakage(self, transcripts_sdf, profiles_sdf):
-        out = asof.asof_join(
-            transcripts_sdf, profiles_sdf, on="ts", by="conv_id", right_ts_alias="profile_ts"
-        )
-        leaked = out.filter("profile_ts > ts").count()
-        assert leaked == 0
-
     def test_future_mutation_invariance(self, spark, transcripts_pdf, profiles_pdf):
         """Temporal-leakage property (SURVEY.md §5.2.2): mutating any profile
         row with ts' > t must leave features at t bit-identical."""
         cut = transcripts_pdf["ts"].quantile(0.5)
-        base = asof.asof_join(
+        base = asof.asof_join_union_window(
             spark.createDataFrame(transcripts_pdf),
             spark.createDataFrame(profiles_pdf),
             right_ts_alias="profile_ts",
@@ -102,7 +95,7 @@ class TestAsofSpark:
         assert future.any()
         mutated.loc[future, "empathies"] = 99999
         mutated.loc[future, "state"] = "MUTATED"
-        out2 = asof.asof_join(
+        out2 = asof.asof_join_union_window(
             spark.createDataFrame(transcripts_pdf),
             spark.createDataFrame(mutated),
             right_ts_alias="profile_ts",
@@ -114,59 +107,9 @@ class TestAsofSpark:
             av, bv = a.loc[early, col], b.loc[early, col]
             assert ((av == bv) | (av.isna() & bv.isna())).all(), col
 
-    def test_bucket_invariance(self, transcripts_sdf, profiles_sdf):
-        """Result must not depend on the physical bucket count."""
-        a = (
-            asof.asof_join(transcripts_sdf, profiles_sdf, num_buckets=2)
-            .toPandas()
-            .sort_values(KEY, kind="mergesort")
-            .reset_index(drop=True)
-        )
-        b = (
-            asof.asof_join(transcripts_sdf, profiles_sdf, num_buckets=64)
-            .toPandas()
-            .sort_values(KEY, kind="mergesort")
-            .reset_index(drop=True)
-        )
-        pd.testing.assert_frame_equal(a, b)
-
-    def test_tolerance(self, spark):
-        t = pd.DataFrame(
-            {
-                "conv_id": ["c", "c"],
-                "turn_idx": pd.array([0, 1], dtype="int32"),
-                "ts": pd.to_datetime([1000, 5000], unit="s"),
-            }
-        )
-        p = pd.DataFrame(
-            {"conv_id": ["c"], "ts": pd.to_datetime([900], unit="s"), "v": [1.5]}
-        )
-        out = (
-            asof.asof_join(spark.createDataFrame(t), spark.createDataFrame(p), tolerance_s=500)
-            .toPandas()
-            .sort_values("turn_idx")
-        )
-        assert out["v"].iloc[0] == 1.5  # 100s stale: within tolerance
-        assert pd.isna(out["v"].iloc[1])  # 4100s stale: dropped
-
 
 class TestAsofUnionWindow:
-    """The JVM union-window as-of must be semantically identical to the
-    cogroup/merge_asof variant and to golden."""
-
-    def test_equals_cogroup_variant(self, transcripts_sdf, profiles_sdf):
-        a = (
-            asof.asof_join(transcripts_sdf, profiles_sdf, right_ts_alias="profile_ts")
-            .toPandas().sort_values(KEY, kind="mergesort").reset_index(drop=True)
-        )
-        b = (
-            asof.asof_join_union_window(transcripts_sdf, profiles_sdf, right_ts_alias="profile_ts")
-            .toPandas().sort_values(KEY, kind="mergesort").reset_index(drop=True)
-        )
-        b = b[a.columns]
-        for col in a.columns:
-            av, bv = a[col], b[col]
-            assert ((av == bv) | (av.isna() & bv.isna())).all(), col
+    """Leakage and staleness edges of the union-window as-of."""
 
     def test_zero_leakage(self, transcripts_sdf, profiles_sdf):
         out = asof.asof_join_union_window(
@@ -175,8 +118,6 @@ class TestAsofUnionWindow:
         assert out.filter("profile_ts > ts").count() == 0
 
     def test_tolerance(self, spark):
-        import pandas as pd
-
         t = pd.DataFrame(
             {
                 "conv_id": ["c", "c"],

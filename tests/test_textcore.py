@@ -219,16 +219,16 @@ class TestGoldenAsof:
 class TestStopwords:
     def test_stopword_list_matches_reference_literal(self):
         """STOPWORDS_JA must equal the reference's shipped set
-        (analysis.py:8-13) exactly — parsed from the read-only source so
-        drift is caught."""
-        import ast
-        import re
+        (analysis.py:8-13) exactly.  The reference is frozen, so the set
+        is pinned by size and by the sha256 of its sorted words joined
+        with newlines, both taken from the tree that last parsed and
+        matched that literal."""
+        import hashlib
 
-        src = open("/root/reference/src/evalfilter/analysis.py", encoding="utf-8").read()
-        m = re.search(r"STOPWORDS = (\{.*?\})\n\n", src, re.S)
-        assert m, "reference STOPWORDS literal not found"
-        ref = set(ast.literal_eval(m.group(1)))
-        assert set(tc.STOPWORDS_JA) == ref
+        words = sorted(tc.STOPWORDS_JA)
+        assert len(words) == 78
+        digest = hashlib.sha256("\n".join(words).encode("utf-8")).hexdigest()
+        assert digest == "e0ca832d1cfa993db9ee4b9338eadf862f996f01f7cf993251d153b2cad8e7c5"
 
     def test_analyze_filters_stopwords(self):
         toks = tc.analyze(
